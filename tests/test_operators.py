@@ -327,6 +327,27 @@ class TestJoin:
             del os.environ["SPARK_TSV_BLOOM_JVM_MAX_BYTES"]
         assert got_jvm == got_legacy
 
+    def test_bloom_malformed_env_knob_falls_back(self, tables, monkeypatch):
+        """A non-integer SPARK_TSV_BLOOM_JVM_MAX_BYTES must not raise out
+        of the Bloom joins: the rows equal the default run's."""
+        from tsv_utils_spark.operators.join import (
+            bloom_anti_join,
+            bloom_semi_join,
+        )
+
+        orders, cust = tables["orders"], tables["customer"]
+        small = cust.filter(F.col("c_custkey") % 3 == 0)
+        data = orders.withColumnRenamed("o_custkey", "c_custkey")
+
+        def rows():
+            return [sorted(r.o_orderkey for r in join(
+                data, small, ["c_custkey"]).collect())
+                for join in (bloom_semi_join, bloom_anti_join)]
+
+        default = rows()
+        monkeypatch.setenv("SPARK_TSV_BLOOM_JVM_MAX_BYTES", "abc")
+        assert rows() == default
+
     def test_bloom_empty_filter_side(self, spark, tables):
         """A zero-partition filter df (createDataFrame([], schema)) must
         yield an empty Bloom — semi keeps nothing, anti keeps all."""

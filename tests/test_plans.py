@@ -181,3 +181,59 @@ class TestPlanShape:
         schema = p.split("ReadSchema: ", 1)[1].split("\n", 1)[0]
         assert "l_returnflag" in schema and "l_partkey" in schema
         assert "l_extendedprice" not in schema
+
+    def test_sketch_level1_is_the_arrow_kernel(self, spark):
+        """Every sketch_agg shape runs level 1 as ONE mapInArrow kernel
+        right below the merge exchange: 0, 1 and 4 keys, salt mode (its
+        own salt exchange sits below the kernel) and the size-gated
+        weighted count-min pre-aggregation."""
+        import tsv_utils_spark.plans.quantiles as Q
+        from pyspark.sql import functions as F
+
+        from tsv_utils_spark.plans import SketchSpec, sketch_agg
+
+        li = spark.read.parquet(f"{SF}/lineitem.parquet")
+        for k in ("k2", "k3", "k4"):
+            li = li.withColumn(k, F.col("l_linestatus"))
+        specs = [SketchSpec("hll", "l_partkey", "uc"),
+                 SketchSpec("kll", "l_quantity", "q")]
+        cm = [SketchSpec("cm", "l_linestatus", "m", {"finalize": "mode"})]
+
+        def level1(df):
+            plan = df._jdf.queryExecution().executedPlan()
+            if plan.nodeName() == "AdaptiveSparkPlan":
+                plan = plan.initialPlan()  # exchanges already placed
+            names = []
+            while True:  # the merge is the root's left-most spine
+                names.append(plan.nodeName())
+                if plan.children().isEmpty():
+                    return names
+                plan = plan.children().apply(0)
+
+        def check(spine, label):
+            assert spine.count("FlatMapGroupsInPandas") == 1, (label, spine)
+            below = spine[spine.index("Exchange") + 1:]
+            below = [n for n in below if n != "Project"]
+            assert below[0] == "MapInArrow", (label, spine)
+            assert "MapInPandas" not in spine, (label, spine)
+
+        shapes = {
+            "0 keys": sketch_agg(li, [], specs),
+            "1 key": sketch_agg(li, ["l_returnflag"], specs),
+            "4 keys": sketch_agg(li, ["l_returnflag", "k2", "k3", "k4"],
+                                 specs),
+            "salt": sketch_agg(li, ["l_returnflag"], specs, mode="salt",
+                               salt_partitions=4),
+        }
+        old = Q.MIN_INPUT_BYTES
+        try:
+            Q.MIN_INPUT_BYTES = 0
+            shapes["weighted cm"] = sketch_agg(li, ["l_returnflag"], cm)
+        finally:
+            Q.MIN_INPUT_BYTES = old
+        for label, df in shapes.items():
+            check(level1(df), label)
+        salt = level1(shapes["salt"])
+        assert salt.count("Exchange") == 2, salt
+        wcm = level1(shapes["weighted cm"])
+        assert wcm[wcm.index("MapInArrow") + 1] == "HashAggregate", wcm

@@ -249,6 +249,24 @@ class TestFusedSelection:
             assert got is not None, bounds
             _assert_bit_equal(ref, got)
 
+    def test_short_bounds_list_takes_three_pass(self, spark, tmp_path):
+        """A bounds list shorter than value_cols is ignored (the 3-pass
+        shape runs) instead of indexing past its end."""
+        rng = random.Random(17)
+        rows = [(rng.choice("ab"), rng.uniform(-50, 50), rng.gauss(0, 9))
+                for _ in range(3000)]
+        df = self._parquet(spark, tmp_path, rows,
+                           "k string, v double, w double")
+
+        def sel(**kw):
+            out = selection_quantiles(
+                df, ["k"], [F.col("v"), F.col("w")], [PROBS, PROBS],
+                [[f"v{j}" for j in range(len(PROBS))],
+                 [f"w{j}" for j in range(len(PROBS))]], **kw)
+            return sorted(tuple(r) for r in out.collect())
+
+        assert sel(bounds_per_col=[(-50.0, 50.0)]) == sel()
+
     def test_discrete_resolves_in_one_pass(self, spark, tmp_path):
         rows = [(float(i % 13),) for i in range(30000)]
         df = self._parquet(spark, tmp_path, rows, "v double")

@@ -161,6 +161,8 @@ class TestArrowKernelEdges:
         assert [int(v) for v in out["uc"]] == [2, 2]  # {10,20}, {30,40}
 
     def test_arrow_matches_pandas_kernel(self, tables):
+        """The one level-1 kernel agrees with itself at 1, 2, 4 and 0
+        key columns, and keeps NULL keys distinct from ""."""
         from pyspark.sql import functions as F
 
         li = tables["lineitem"]
@@ -172,16 +174,123 @@ class TestArrowKernelEdges:
         li2 = li.withColumn("rf2", F.col("l_returnflag"))
         arrow2 = sketch_agg(li2, ["l_returnflag", "rf2"], specs) \
             .toPandas().set_index("l_returnflag").sort_index()
-        # >MAX_ARROW_KEYS cols forces the pandas kernel
+        # 4 key columns: same kernel, groups read from segment rows
         li4 = (li.withColumn("rf2", F.col("l_returnflag"))
                  .withColumn("rf3", F.col("l_returnflag"))
                  .withColumn("rf4", F.col("l_returnflag")))
-        pandas_k = sketch_agg(li4, ["l_returnflag", "rf2", "rf3", "rf4"],
-                              specs) \
+        arrow4 = sketch_agg(li4, ["l_returnflag", "rf2", "rf3", "rf4"],
+                            specs) \
             .toPandas().set_index("l_returnflag").sort_index()
-        for other in (arrow2, pandas_k):
+        for other in (arrow2, arrow4):
             assert (arrow["uc"].values == other["uc"].values).all()
             assert (arrow["m"].values == other["m"].values).all()
+
+        # 0 keys: one global group, equal to a constant 1-key grouping
+        glob = sketch_agg(li, [], specs, include_rows=True).collect()
+        const = sketch_agg(li.withColumn("one", F.lit(1)), ["one"], specs,
+                           include_rows=True).collect()
+        assert len(glob) == 1 and len(const) == 1
+        assert tuple(glob[0]) == tuple(const[0])[1:]
+        assert glob[0]["rows"] == li.count()
+
+        # 4 keys with NULLs: a NULL key stays distinct from ""
+        df = li.select(
+            F.when(F.col("l_linenumber") % 3 == 0, F.lit(None))
+             .when(F.col("l_linenumber") % 3 == 1, F.lit(""))
+             .otherwise(F.col("l_returnflag")).alias("k1"),
+            F.col("l_linestatus").alias("k2"),
+            F.when(F.col("l_linenumber") % 2 == 0, F.lit(None))
+             .otherwise(F.lit("")).alias("k3"),
+            F.col("l_returnflag").alias("k4"),
+            "l_partkey", "l_linestatus")
+        keys = ["k1", "k2", "k3", "k4"]
+        got = {tuple(r[k] for k in keys): (r["rows"], int(r["uc"]), r["m"])
+               for r in sketch_agg(df, keys, specs,
+                                   include_rows=True).collect()}
+        exact = {tuple(r[k] for k in keys): (r["n"], r["uc"], r["l_linestatus"])
+                 for r in df.groupBy(*keys).agg(
+                     F.count(F.lit(1)).alias("n"),
+                     F.countDistinct("l_partkey").alias("uc"),
+                     F.first("l_linestatus").alias("l_linestatus"))
+                 .collect()}
+        assert got == exact
+        assert any(k[0] is None for k in got) and any(k[0] == "" for k in got)
+        assert any(k[2] is None for k in got) and any(k[2] == "" for k in got)
+
+    @staticmethod
+    def _run_kernel(keys, key_type, specs, batch):
+        from pyspark.sql import types as T
+
+        from tsv_utils_spark.plans.arrow_kernel import make_arrow_partial_fn
+
+        schema = T.StructType(
+            [T.StructField(k, key_type) for k in keys]
+            + [T.StructField("__rows", T.LongType())]
+            + [T.StructField(f"__blob_{i}", T.BinaryType())
+               for i in range(len(specs))])
+        fn = make_arrow_partial_fn(keys, [f"__in_{i}" for i in
+                                          range(len(specs))],
+                                   specs, schema, 100_000)
+        return [r for out in fn(iter([batch])) for r in out.to_pylist()]
+
+    def test_kernel_wide_keys_redensify(self):
+        """8 key columns of ~1300 distinct values each overflow a plain
+        int64 mixed-radix pack (1300^8 > 2^63): the kernel re-densifies
+        the packed code and must still find exactly the distinct key
+        tuples, their row counts and their values."""
+        import collections
+
+        import pyarrow as pa
+        from pyspark.sql import types as T
+
+        rng = np.random.default_rng(5)
+        n, keys = 3000, [f"k{j}" for j in range(8)]
+        cols = {k: rng.integers(0, 1500, n) for k in keys}
+        for k in keys:  # repeat tuples so groups hold several rows
+            cols[k][2500:] = cols[k][:500]
+        hashes = rng.integers(1, 1 << 62, n)
+        nulls = np.zeros(n, dtype=bool)
+        nulls[::7] = True  # NULL keys in one column
+        arrays = [pa.array(cols[k], mask=nulls if k == "k3" else None)
+                  for k in keys]
+        batch = pa.RecordBatch.from_arrays(
+            arrays + [pa.array(hashes)], names=keys + ["__in_0"])
+        spec = SketchSpec("hll", "h", "uc")
+        out = self._run_kernel(keys, T.LongType(), [spec], batch)
+
+        tuples = list(zip(*[a.to_pylist() for a in arrays]))
+        want = collections.Counter(tuples)
+        uniq_h = collections.defaultdict(set)
+        for t, h in zip(tuples, hashes.tolist()):
+            uniq_h[t].add(h)
+        got = {tuple(r[k] for k in keys): r for r in out}
+        assert len(got) == len(out) == len(want)
+        assert {t: r["__rows"] for t, r in got.items()} == dict(want)
+        for t, r in got.items():
+            assert spec.deserialize(r["__blob_0"]).estimate() == \
+                len(uniq_h[t])
+
+    def test_kernel_weight_column(self):
+        """A ``__w`` column weights its row: the weights sum into the
+        cm value counts and __rows (NULL values count rows only)."""
+        import pyarrow as pa
+        from pyspark.sql import types as T
+
+        from tsv_utils_spark.plans.arrow_kernel import WEIGHT_COL
+
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(["a", "a", "a", "b", None]),
+             pa.array(["x", "y", None, "y", "x"]),
+             pa.array([5, 2, 4, 1, 3])],
+            names=["g", "__in_0", WEIGHT_COL])
+        spec = SketchSpec("cm", "v", "m", {"finalize": "mode"})
+        out = {r["g"]: r for r in
+               self._run_kernel(["g"], T.StringType(), [spec], batch)}
+        assert {g: r["__rows"] for g, r in out.items()} == \
+            {"a": 11, "b": 1, None: 3}
+        cm = spec.deserialize(out["a"]["__blob_0"])
+        assert cm.mode() == ("x", 5) and cm.n == 7
+        assert spec.deserialize(out[None]["__blob_0"]).mode() == ("x", 3)
 
     def test_cm_topk_json_finalize(self, li, li_pdf):
         import json
@@ -335,12 +444,8 @@ class TestSketchRollup:
             sketch_rollup(fine, ["nope"], specs)
 
     def test_salt_mode_typed_timestamp_roundtrip(self, spark):
-        """mode='salt' runs the pandas kernel, whose factorized uniq
-        arrays are datetime64[ns] — .tolist() on those yields raw
-        epoch-ns ints, which (pre-fix) split candidate keys between int
-        (pandas path) and datetime (Arrow path) across merged partials
-        and could finalize a typed mode as a raw int. The salted result
-        must agree with the map-mode result and stay a real timestamp."""
+        """A typed timestamp mode must come out of both modes as a real
+        timestamp (never raw epoch-ns ints) with the same value."""
         import datetime
 
         df = spark.range(300).selectExpr(
@@ -378,9 +483,8 @@ class TestSketchRollup:
         # UTC session (the repo default): fine
         out = sketch_agg(df, ["g"], spec)
         assert out.count() == 2
-        # non-UTC session: the pandas/salt kernels would see
-        # session-local naive values while Arrow sees aware-UTC —
-        # refuse loudly instead of splitting candidates
+        # non-UTC session: the merge would hand the naive-UTC mode back
+        # as session-local time and shift it — refuse loudly instead
         old = spark.conf.get("spark.sql.session.timeZone")
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
         try:

@@ -408,7 +408,7 @@ class TestHashing:
 
 class TestTimezoneCanonicalization:
     def test_aware_and_naive_merge_to_one_candidate(self):
-        # Arrow kernel yields tz-aware datetimes, pandas kernel naive
+        # Arrow kernel yields tz-aware datetimes, pandas inputs naive
         # datetime64 — the same instant must be one candidate/cell
         import datetime
 

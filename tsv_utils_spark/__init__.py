@@ -12,7 +12,7 @@ SURVEY.md) as a distributed library:
                     count-min, Bloom, MinHash, SimHash) with binary
                     serialization, usable standalone or inside Spark UDAFs.
 - ``plans``       — the two-level partial+final sketch-aggregation engine
-                    (mapInPandas partial update → groupBy merge), explicit
+                    (mapInArrow partial update → groupBy merge), explicit
                     salting for hot keys, checkpoint/resume of partials.
 - ``sources``     — TSV/CSV readers with csv2tsv semantics, the
                     deterministic synthetic source-code table generator.

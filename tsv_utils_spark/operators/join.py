@@ -169,11 +169,13 @@ def _jvm_bloom_hit_col(filter_df: DataFrame, keys: list[str],
     way (no false negatives in any Bloom)."""
     import os
 
-    max_bytes = int(os.environ.get("SPARK_TSV_BLOOM_JVM_MAX_BYTES",
-                                   _JVM_BLOOM_MAX_BYTES))
-    if max_bytes <= 0:
-        return None
     try:
+        # parsed inside the try: a malformed value takes the fallback
+        # path instead of raising out of the join
+        max_bytes = int(os.environ.get("SPARK_TSV_BLOOM_JVM_MAX_BYTES",
+                                       _JVM_BLOOM_MAX_BYTES))
+        if max_bytes <= 0:
+            return None
         from pyspark.sql.classic.column import Column as _CCol
 
         spark = filter_df.sparkSession

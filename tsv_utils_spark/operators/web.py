@@ -47,8 +47,8 @@ def url_normalize(col: str | Column) -> Column:
     - tracking query parameters dropped (``utm_*`` prefix plus
       :data:`TRACKING_PARAMS`, name matched case-insensitively),
       remaining parameters sorted bytewise, empty pairs dropped;
-    - a single trailing slash stripped from non-root paths; a bare
-      ``/`` root path dropped.
+    - every trailing slash stripped from the path, so a bare ``/``
+      root path is dropped (and normalizing is idempotent).
 
     Rows that do not parse as ``scheme://authority...`` normalize to
     NULL (callers filter or route them to an invalid-URL sink).
@@ -67,10 +67,9 @@ def url_normalize(col: str | Column) -> Column:
         | ((scheme == "https") & (port == "443")), F.lit("")) \
         .otherwise(F.concat(F.lit(":"), port))
     path = F.regexp_extract(u, _PATH_RE, 1)
-    path_c = F.when(path.isin("", "/"), F.lit("")) \
-        .otherwise(F.when(path.endswith("/"),
-                          path.substr(F.lit(1), F.length(path) - 1))
-                   .otherwise(path))
+    # every trailing slash goes ('/a//' -> '/a'), so normalizing twice
+    # changes nothing
+    path_c = F.regexp_replace(path, "/+$", "")
     query = F.regexp_extract(F.regexp_extract(u, _PREFRAG_RE, 1),
                              _QUERY_RE, 1)
     pairs = F.filter(

@@ -4,17 +4,17 @@ This is the engine the whole library revolves around: PySpark has no
 native partial/final protocol for pandas UDAFs, so we build the classic
 two-level plan explicitly (SURVEY.md §4 "what needs custom work"):
 
-    level 1 (partial)  — mapInArrow/mapInPandas over the scan: per input
-                         partition, update one sketch set per group per
-                         spec, fully vectorized (Arrow-native kernel for
-                         grouped runs — see plans/arrow_kernel.py — NumPy
-                         batch updates, values pre-hashed JVM-side with
-                         xxhash64 where possible). Emits
-                         (group keys, blob per spec) rows — the map-side
-                         combine. Memory-bounded: when the per-partition
-                         group map exceeds ``max_groups_per_partition``,
-                         partials are flushed early (extra partial rows per
-                         group are fine — merge absorbs them).
+    level 1 (partial)  — mapInArrow over the scan, through ONE kernel
+                         (plans/arrow_kernel.py) at any number of group
+                         keys: per input partition, update one sketch set
+                         per group per spec, fully vectorized (NumPy batch
+                         updates, values pre-hashed JVM-side with xxhash64
+                         where possible). Emits (group keys, blob per
+                         spec) rows — the map-side combine.
+                         Memory-bounded: when the per-partition group map
+                         exceeds ``max_groups_per_partition``, partials
+                         are flushed early (extra partial rows per group
+                         are fine — merge absorbs them).
     level 2 (final)    — groupBy(keys).applyInPandas: deserialize, merge
                          (associative, any order), finalize to estimate
                          columns. Shuffles only the tiny partial rows,
@@ -22,11 +22,10 @@ two-level plan explicitly (SURVEY.md §4 "what needs custom work"):
 
 Skew: the partial level eliminates hot-key shuffle skew for aggregation by
 construction (each input partition contributes at most a handful of rows
-per key, however hot). For the explicit-salting variant demanded by
-workloads that want applyInPandas-style partials (and to evidence the
-north rule), ``mode='salt'`` adds ``salt = pmod(xxhash64(all cols), S)``
-and runs level 1 as groupBy(keys+salt).applyInPandas — two shuffles, both
-on bounded fan-out keys.
+per key, however hot). The explicit-salting variant of the same plan,
+``mode='salt'``, adds ``salt = pmod(xxhash64(all cols), S)``, repartitions
+on keys+salt and runs the same level-1 kernel per salted partition — two
+shuffles, both on bounded fan-out keys.
 
 Both modes produce identical estimates (tests permute modes and merge
 orders).
@@ -43,6 +42,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tsv_utils_spark.plans.arrow_kernel import (
+    WEIGHT_COL,
+    make_arrow_partial_fn,
+)
 from tsv_utils_spark.sketches.bloom import BloomFilter
 from tsv_utils_spark.sketches.countmin import CountMin
 from tsv_utils_spark.sketches.hll import HyperLogLog
@@ -279,11 +282,13 @@ _TYPE_MAP = {"double": T.DoubleType, "long": T.LongType,
 
 def _check_typed_tz(df: DataFrame, specs: list) -> None:
     """Typed cm/bloom over a session-local TIMESTAMP column requires a
-    UTC session: the Arrow kernel materializes such values as
-    tz-AWARE datetimes (canonicalized to naive UTC) while the
-    pandas/salt kernels see naive SESSION-LOCAL datetime64 — under a
-    non-UTC session the same instant would land in two candidate
-    cells. TIMESTAMP_NTZ and DATE are timezone-free and always fine."""
+    UTC session. The Arrow kernel is timezone-free — it sees tz-aware
+    datetimes and canonicalizes candidates to naive UTC — but the
+    level-2 merge returns a typed mode as that naive-UTC value through
+    applyInPandas, which reads naive timestamps as SESSION-LOCAL time:
+    under a non-UTC session the finalized instant would shift by the
+    zone offset. TIMESTAMP_NTZ and DATE are timezone-free and always
+    fine."""
     risky = [s.col for s in specs
              if s.op in ("cm", "bloom") and s.params.get("typed")
              and dict(df.dtypes).get(s.col) == "timestamp"]
@@ -305,55 +310,20 @@ def sketch_agg(df: DataFrame,
                mode: str = "map",
                salt_partitions: int | str = 32,
                max_groups_per_partition: int = 100_000,
-               include_rows: bool = False,
-               hash_group_keys: bool | None = None) -> DataFrame:
+               include_rows: bool = False) -> DataFrame:
     """All sketches for all specs computed in ONE pass over the data
     (shared scan — the distributed form of tsv-summarize's shared value
     lists, tsv-summarize.d:2038-2105), then one merge shuffle on the keys.
-
-    ``hash_group_keys`` (default off): ship only ``xxhash64(keys)`` (one
-    int64) per row instead of the key columns, recovering key VALUES from
-    a JVM-side distinct broadcast-joined onto the merged result. Measured
-    on this box it does NOT pay for short single-string keys (the extra
-    distinct scan outweighs the saved object conversion) — reserve it for
-    WIDE multi-column string keys. Collision risk ~n_groups^2 / 2^65.
     """
+    if mode not in ("map", "salt"):
+        raise ValueError("mode must be 'map' or 'salt'")
     group_by = list(group_by)
     _check_typed_tz(df, specs)
-    if hash_group_keys is None:
-        hash_group_keys = False
 
     canon, cmap = _canon_specs(specs)
     in_cols = [spec.input_expr(i) for i, spec in enumerate(canon)]
-    in_names = [f"__in_{i}" for i in range(len(canon))]
     final_schema = _final_schema(df, group_by, specs, include_rows)
-
-    if mode == "map" and hash_group_keys and group_by:
-        gkey = F.xxhash64(*[F.col(c) for c in group_by]).alias("__gkey")
-        proj = df.select(gkey, *in_cols)
-        partial_schema = T.StructType(
-            [T.StructField("__gkey", T.LongType()),
-             T.StructField("__rows", T.LongType())]
-            + [T.StructField(f"__blob_{i}", T.BinaryType())
-               for i in range(len(canon))])
-        hashed_final = T.StructType(
-            [T.StructField("__gkey", T.LongType())]
-            + [f for f in final_schema.fields if f.name not in group_by])
-        partials = proj.mapInPandas(
-            _make_partial_fn(["__gkey"], in_names, canon, partial_schema,
-                             max_groups_per_partition),
-            schema=partial_schema)
-        merged = partials.groupBy("__gkey").applyInPandas(
-            _make_merge_fn(["__gkey"], specs, hashed_final, include_rows,
-                           canon_map=cmap),
-            schema=hashed_final)
-        # recover key values: distinct keys is a pure-JVM aggregate (tiny)
-        names = df.select(*group_by) \
-            .groupBy(*group_by).agg(F.lit(1)) \
-            .select(*group_by,
-                    F.xxhash64(*[F.col(c) for c in group_by]).alias("__gkey"))
-        out_cols = [f.name for f in final_schema.fields]
-        return merged.join(F.broadcast(names), "__gkey").select(*out_cols)
+    proj = None
 
     # ---- pure distinct-sketch fast path (r6) --------------------------
     # hll/theta state is a function of the DISTINCT hash set only
@@ -378,42 +348,21 @@ def sketch_agg(df: DataFrame,
                 # CM is LINEAR in value multiplicities (table[d][h(v)] +=
                 # count, n += count) and mode/heavy_hitters RE-SCORE the
                 # candidate set against the merged table, so a JVM-side
-                # (keys, value) -> count pre-aggregation feeding the
-                # existing weighted CountMin.update produces the same
-                # finalized results: identical table cells, identical
-                # candidate set whenever distinct values fit
-                # max_candidates (the exact-mode regime the oracled
-                # queries run in). The Arrow boundary then pays
-                # |distinct (key, value) pairs| rows instead of |rows|,
-                # and the pre-aggregation itself is a map-side-combined
-                # codegen hash agg (skew-immune). Values cross as the
-                # same object-dtype arrays the unweighted kernels feed,
-                # so every hash cell matches bit-for-bit.
-                return _cm_weighted_fast_agg(df, group_by, specs, canon,
-                                             cmap, in_cols, final_schema)
-            if len(canon) == 1:
+                # (keys, value) -> count pre-aggregation feeding weighted
+                # CountMin updates produces the same finalized results:
+                # identical table cells, identical candidate set whenever
+                # distinct values fit max_candidates (the exact-mode
+                # regime the oracled queries run in). The Arrow boundary
+                # then pays |distinct (key, value) pairs| rows instead of
+                # |rows|, and the pre-aggregation itself is a
+                # map-side-combined codegen hash agg (skew-immune). The
+                # kernel sums the count column as row weights.
+                proj = (df.select(*group_by, in_cols[0])
+                          .groupBy(*group_by, "__in_0")
+                          .agg(F.count(F.lit(1)).alias(WEIGHT_COL)))
+            elif len(canon) == 1:
                 proj = df.select(*group_by, in_cols[0]).dropDuplicates()
-                partial_schema = _partial_schema(df, group_by, 1)
-                from tsv_utils_spark.plans.arrow_kernel import (
-                    make_arrow_partial_fn as _mk,
-                )
-
-                if 1 <= len(group_by) <= 3:
-                    partials = proj.mapInArrow(
-                        _mk(group_by, in_names, canon, partial_schema,
-                            max_groups_per_partition),
-                        schema=partial_schema)
-                else:
-                    partials = proj.mapInPandas(
-                        _make_partial_fn(group_by, in_names, canon,
-                                         partial_schema,
-                                         max_groups_per_partition),
-                        schema=partial_schema)
-                return partials.groupBy(*group_by).applyInPandas(
-                    _make_merge_fn(group_by, specs, final_schema,
-                                   include_rows, canon_map=cmap),
-                    schema=final_schema)
-            if group_by:
+            elif group_by:
                 from tsv_utils_spark.functions.joins import join_null_safe
 
                 # one sub-aggregation per CANONICAL accumulator, carrying
@@ -444,137 +393,33 @@ def sketch_agg(df: DataFrame,
     # plan time, so blocked mixed calls keep the single shared
     # boundary; only the all-prefilterable paths above split.
 
-    proj = df.select(*group_by, *in_cols)
-    partial_schema = _partial_schema(df, group_by, len(canon))
-    if mode == "map":
-        from tsv_utils_spark.plans.arrow_kernel import (
-            MAX_ARROW_KEYS,
-            make_arrow_partial_fn,
-        )
-
-        if 1 <= len(group_by) <= MAX_ARROW_KEYS:
-            # Arrow-native kernel: no per-row Python objects for keys
-            # or cm/bloom value columns (plans/arrow_kernel.py)
-            partials = proj.mapInArrow(
-                make_arrow_partial_fn(group_by, in_names, canon,
-                                      partial_schema,
-                                      max_groups_per_partition),
-                schema=partial_schema)
-        else:
-            partials = proj.mapInPandas(
-                _make_partial_fn(group_by, in_names, canon, partial_schema,
-                                 max_groups_per_partition),
-                schema=partial_schema)
-    elif mode == "salt":
-        if salt_partitions == "auto":
-            salt_partitions = choose_salt(df, group_by)
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in proj.columns]),
-                      F.lit(salt_partitions)).alias("__salt")
-        salted = proj.select("*", salt)
-        partials = salted.groupBy(*group_by, "__salt").applyInPandas(
-            _make_salt_partial_fn(group_by, in_names, canon, partial_schema),
-            schema=partial_schema)
-    else:
-        raise ValueError("mode must be 'map' or 'salt'")
-
-    merged = partials.groupBy(*group_by).applyInPandas(
+    if proj is None:
+        proj = df.select(*group_by, *in_cols)
+        if mode == "salt":
+            if salt_partitions == "auto":
+                salt_partitions = choose_salt(df, group_by)
+            salt = F.pmod(F.xxhash64(*[F.col(c) for c in proj.columns]),
+                          F.lit(salt_partitions)).alias("__salt")
+            proj = proj.select("*", salt).repartition(*group_by, "__salt")
+    partials = _partials(proj, group_by, canon,
+                         _partial_schema(df, group_by, len(canon)),
+                         max_groups_per_partition)
+    return partials.groupBy(*group_by).applyInPandas(
         _make_merge_fn(group_by, specs, final_schema, include_rows,
                        canon_map=cmap),
         schema=final_schema)
-    return merged
 
 
-def _cm_weighted_fast_agg(df: DataFrame, group_by: list[str],
-                          specs: list[SketchSpec], canon: list[SketchSpec],
-                          cmap: list[int], in_cols: list,
-                          final_schema: T.StructType) -> DataFrame:
-    """Large-input count-min path: JVM (keys, value) -> count pre-agg,
-    then weighted CountMin updates over the distinct pairs (see the
-    dispatch comment in sketch_agg). Level-2 merge/finalize is the
-    standard one, so twins sharing the accumulator finalize per spec."""
-    in_name = "__in_0"
-    pre = (df.select(*group_by, in_cols[0])
-             .groupBy(*group_by, in_name)
-             .agg(F.count(F.lit(1)).alias("__w")))
-    partial_schema = _partial_schema(df, group_by, 1)
-    partials = pre.mapInPandas(
-        _make_weighted_cm_partial_fn(group_by, in_name, canon[0],
-                                     partial_schema),
+def _partials(proj: DataFrame, group_by: list[str], specs: list[SketchSpec],
+              partial_schema: T.StructType, max_groups: int,
+              lineage_epoch: int | None = None) -> DataFrame:
+    """Level 1: the Arrow kernel over ``proj`` = (keys, ``__in_i``
+    inputs[, extra columns the kernel reads or ignores])."""
+    in_names = [f"__in_{i}" for i in range(len(specs))]
+    return proj.mapInArrow(
+        make_arrow_partial_fn(group_by, in_names, specs, partial_schema,
+                              max_groups, lineage_epoch=lineage_epoch),
         schema=partial_schema)
-    return partials.groupBy(*group_by).applyInPandas(
-        _make_merge_fn(group_by, specs, final_schema, False,
-                       canon_map=cmap),
-        schema=final_schema)
-
-
-def _make_weighted_cm_partial_fn(group_by, in_name, spec, partial_schema,
-                                 max_buffered_rows: int = 4_000_000):
-    """Level-1 kernel for the weighted cm fast path: input rows are
-    pre-aggregated (keys..., value, __w) pairs — one weighted
-    CountMin.update per group per partition. Values are converted to the
-    SAME object-dtype arrays the unweighted kernels feed (hash64 is
-    dtype-sensitive; the merged table's cells must line up with the
-    object-dtype re-score in heavy_hitters). NULL-value pairs count into
-    __rows but are dropped from the update, matching row semantics."""
-    out_cols = [f.name for f in partial_schema.fields]
-
-    def partial_fn(batches):
-        vals: dict[tuple, list] = {}
-        cnts: dict[tuple, list] = {}
-        rows: dict[tuple, int] = {}
-        buffered = 0
-
-        def flush():
-            nonlocal buffered
-            items = list(vals.items())
-            vals.clear()
-            buffered = 0
-            CHUNK = 1024
-            for lo in range(0, len(items), CHUNK):
-                data = {c: [] for c in out_cols}
-                for key, chunks in items[lo:lo + CHUNK]:
-                    vv = chunks[0] if len(chunks) == 1 \
-                        else np.concatenate(chunks)
-                    wc = cnts[key]
-                    ww = wc[0] if len(wc) == 1 else np.concatenate(wc)
-                    s = spec.make()
-                    sv = pd.Series(vv)
-                    keep = sv.notna().to_numpy()
-                    if keep.any():
-                        s.update(sv[keep].to_numpy(dtype=object),
-                                 counts=ww[keep].astype(np.int64))
-                    for j, k in enumerate(group_by):
-                        data[k].append(key[j])
-                    data["__rows"].append(rows[key])
-                    data["__blob_0"].append(s.serialize())
-                yield pd.DataFrame(data)
-            cnts.clear()
-            rows.clear()
-
-        for pdf in batches:
-            v = pdf[in_name].to_numpy()
-            w = pdf["__w"].to_numpy()
-            if group_by:
-                idx = pdf.groupby(group_by, sort=False, dropna=False).indices
-            else:
-                idx = {(): np.arange(len(pdf))}
-            for key, rix in idx.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                slot = vals.get(key)
-                if slot is None:
-                    vals[key] = slot = []
-                    cnts[key] = []
-                    rows[key] = 0
-                slot.append(v[rix])
-                cnts[key].append(w[rix])
-                rows[key] += int(w[rix].sum())
-            buffered += len(pdf)
-            if buffered > max_buffered_rows:
-                yield from flush()
-        yield from flush()
-
-    return partial_fn
 
 
 def sketch_partials(df: DataFrame,
@@ -595,24 +440,10 @@ def sketch_partials(df: DataFrame,
         raise ValueError("sketch_partials needs at least one group key "
                          "(use sketch_agg for global aggregation)")
     in_cols = [spec.input_expr(i) for i, spec in enumerate(specs)]
-    in_names = [f"__in_{i}" for i in range(len(specs))]
     proj = df.select(*group_by, *in_cols)
     partial_schema = _partial_schema(df, group_by, len(specs))
-    from tsv_utils_spark.plans.arrow_kernel import (
-        MAX_ARROW_KEYS,
-        make_arrow_partial_fn,
-    )
-
-    if len(group_by) <= MAX_ARROW_KEYS:
-        partials = proj.mapInArrow(
-            make_arrow_partial_fn(group_by, in_names, specs,
-                                  partial_schema, max_groups_per_partition),
-            schema=partial_schema)
-    else:
-        partials = proj.mapInPandas(
-            _make_partial_fn(group_by, in_names, specs, partial_schema,
-                             max_groups_per_partition),
-            schema=partial_schema)
+    partials = _partials(proj, group_by, specs, partial_schema,
+                         max_groups_per_partition)
     return partials.groupBy(*group_by).applyInPandas(
         _make_blob_merge_fn(group_by, specs, partial_schema),
         schema=partial_schema)
@@ -671,82 +502,6 @@ def _make_blob_merge_fn(group_by, specs, out_schema):
     return merge_fn
 
 
-def _make_partial_fn(group_by, in_names, specs, partial_schema, max_groups,
-                     lineage_epoch: int | None = None,
-                     max_buffered_rows: int = 4_000_000):
-    """Level-1 kernel. High-cardinality-friendly: per batch we only
-    ACCUMULATE raw value slices per group (cheap dict appends over
-    groupby().indices); sketches are built ONCE per group at flush with a
-    single vectorized update — O(groups) sketch constructions per
-    partition instead of O(groups x batches).
-
-    With ``lineage_epoch`` set, partial rows carry (epoch, partition_id)
-    lineage columns (the checkpointed plan's schema).
-    """
-    out_cols = [f.name for f in partial_schema.fields]
-
-    def partial_fn(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        buf: dict[tuple, list] = {}     # key -> [list of np arrays per spec]
-        rows: dict[tuple, int] = {}
-        buffered = 0
-
-        FLUSH_CHUNK = 1024  # groups per emitted frame: keeps any single
-        #                     Arrow binary column far below the 2GB limit
-
-        def flush():
-            nonlocal buffered
-            items = list(buf.items())
-            buf.clear()
-            buffered = 0
-            for lo in range(0, len(items), FLUSH_CHUNK):
-                data = {c: [] for c in out_cols}
-                for key, per_spec in items[lo:lo + FLUSH_CHUNK]:
-                    if lineage_epoch is not None:
-                        data["epoch"].append(lineage_epoch)
-                        data["partition_id"].append(pid)
-                    for j, k in enumerate(group_by):
-                        data[k].append(key[j])
-                    data["__rows"].append(rows[key])
-                    for i, spec in enumerate(specs):
-                        s = spec.make()
-                        chunks = per_spec[i]
-                        if chunks:
-                            spec.update_array(
-                                s, chunks[0] if len(chunks) == 1
-                                else np.concatenate(chunks))
-                        data[f"__blob_{i}"].append(s.serialize())
-                yield pd.DataFrame(data)
-            rows.clear()
-
-        for pdf in batches:
-            cols = [pdf[n].to_numpy() for n in in_names]
-            if len(group_by):
-                idx = pdf.groupby(group_by, sort=False,
-                                  dropna=False).indices
-            else:
-                idx = {(): np.arange(len(pdf))}
-            for key, rix in idx.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                slot = buf.get(key)
-                if slot is None:
-                    slot = [[] for _ in specs]
-                    buf[key] = slot
-                    rows[key] = 0
-                rows[key] += len(rix)
-                for i in range(len(specs)):
-                    slot[i].append(cols[i][rix])
-            buffered += len(pdf)
-            if len(buf) > max_groups or buffered > max_buffered_rows:
-                yield from flush()
-        yield from flush()
-
-    return partial_fn
-
-
 def choose_salt(df: DataFrame, group_by: list[str],
                 sample_fraction: float = 0.002, seed: int = 7,
                 headroom: float = 2.0) -> int:
@@ -772,20 +527,6 @@ def choose_salt(df: DataFrame, group_by: list[str],
     import math
 
     return max(1, min(sp, math.ceil(share * sp * headroom)))
-
-
-def _make_salt_partial_fn(group_by, in_names, specs, partial_schema):
-    def salt_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        sketches = [spec.make() for spec in specs]
-        for i, spec in enumerate(specs):
-            spec.update(sketches[i], pdf[in_names[i]])
-        row = {k: [pdf[k].iloc[0]] for k in group_by}
-        row["__rows"] = [len(pdf)]
-        for i, s in enumerate(sketches):
-            row[f"__blob_{i}"] = [s.serialize()]
-        return pd.DataFrame(row)
-
-    return salt_fn
 
 
 def _make_merge_fn(group_by, specs, final_schema, include_rows,

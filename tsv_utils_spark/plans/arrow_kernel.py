@@ -1,13 +1,15 @@
-"""Arrow-native level-1 kernel (mapInArrow) — the fast path of sketch_agg.
+"""Arrow-native level-1 kernel (mapInArrow) — the only level-1 kernel of
+the sketch engine: sketch_agg in map and salt mode and its prefilters,
+sketch_partials, the checkpointed plan and the streaming processor.
 
-The pandas kernel pays per-row Python object creation for every string
-column crossing the Arrow boundary (group keys, count-min/Bloom values).
-This kernel keeps everything columnar:
+Everything stays columnar:
 
-- group keys: ``pc.dictionary_encode`` per key column -> int codes, packed
-  into ONE int64 mixed-radix code per row (supports up to 3 key columns
-  per 64-bit budget); only the DISTINCT key tuples are ever converted to
-  Python (one ``as_py`` per column per distinct group per batch);
+- group keys, any number of columns (zero = one global group):
+  ``pc.dictionary_encode`` per key column -> int codes, packed into ONE
+  int64 mixed-radix code per row; when the next multiply could overflow
+  int64 the packed code is re-densified with ``np.unique`` first. A
+  group's key tuple is read from the first row of its sorted segment, so
+  only the DISTINCT key tuples are ever converted to Python;
 - hll inputs: already int64 xxhash64 from the JVM — zero-copy numpy;
 - kll/t-digest inputs: float64 numpy (nulls -> NaN, dropped by update);
 - cm/bloom inputs: dictionary-encoded too; per-(group, value) counts come
@@ -15,8 +17,12 @@ This kernel keeps everything columnar:
   counts feed CountMin.update(values, counts) and only distinct values
   are materialized.
 
-Keys beyond 3 columns fall back to the pandas kernel transparently
-(agg.sketch_agg routes).
+A batch column named ``WEIGHT_COL`` gives each row a multiplicity: it
+sums into the cm/bloom value counts and ``__rows`` (the weighted
+count-min path feeds JVM-pre-aggregated (keys, value, count) rows).
+Numeric specs see each row once, which only the multiplicity-invariant
+hll/theta tolerate. Any other extra column (salt mode's ``__salt``) is
+ignored.
 """
 
 from __future__ import annotations
@@ -24,7 +30,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-MAX_ARROW_KEYS = 3
+WEIGHT_COL = "__w"
+_INT64_MAX = int(np.iinfo(np.int64).max)
 
 
 def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
@@ -103,33 +110,37 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
             d = pc.dictionary_encode(col)
             if isinstance(d, pa.ChunkedArray):
                 d = d.combine_chunks()
-            codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            nulls = pc.is_null(col).to_numpy(zero_copy_only=False)
-            return np.where(nulls, -1, codes), d.dictionary
+            codes = pc.fill_null(d.indices, -1) \
+                .to_numpy(zero_copy_only=False).astype(np.int64)
+            return codes, d.dictionary
 
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            key_codes, key_dicts, radices = [], [], []
-            for gname in group_cols:
-                kc = batch.column(batch.schema.get_field_index(gname))
-                codes, dic = encode_col(kc)
-                key_codes.append(codes)
-                key_dicts.append(dic)
-                radices.append(len(dic) + 1)
             # mixed-radix pack into one int64 per row (null -> digit 0)
             combined = np.zeros(n, dtype=np.int64)
-            for codes, radix in zip(key_codes, radices):
+            span = 1  # exclusive upper bound of the packed codes
+            for gname in group_cols:
+                codes, dic = encode_col(batch.column(gname))
+                radix = len(dic) + 1
+                if span * radix > _INT64_MAX:
+                    uniq, combined = np.unique(combined, return_inverse=True)
+                    combined = combined.reshape(-1)
+                    span = len(uniq)
                 combined *= radix
                 combined += codes + 1
+                span *= radix
+            wi = batch.schema.get_field_index(WEIGHT_COL)
+            weights = None if wi < 0 else batch.column(wi) \
+                .to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
 
             # numeric input columns -> numpy once per batch
             num_cols = {}
             for i, spec in enumerate(specs):
                 if i in value_based:
                     continue
-                col = batch.column(batch.schema.get_field_index(in_names[i]))
+                col = batch.column(in_names[i])
                 if spec.op in ("hll", "theta"):
                     num_cols[i] = col.to_numpy(zero_copy_only=False) \
                         .astype(np.int64, copy=False)
@@ -137,42 +148,31 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
                     num_cols[i] = pc.cast(col, pa.float64()) \
                         .to_numpy(zero_copy_only=False)
             # value-based columns -> (codes, dictionary) once per batch
-            val_cols = {}
-            for i in value_based:
-                col = batch.column(batch.schema.get_field_index(in_names[i]))
-                val_cols[i] = encode_col(col)
+            val_cols = {i: encode_col(batch.column(in_names[i]))
+                        for i in value_based}
 
             order = np.argsort(combined, kind="stable")
             sorted_codes = combined[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate([[0], bounds])
-            ends = np.concatenate([bounds, [n]])
-            key_cache: dict = {}
-            for s_, e_ in zip(starts, ends):
-                code = int(sorted_codes[s_])
-                if code in key_cache:
-                    key = key_cache[code]
-                else:
-                    digits = []
-                    rem = code
-                    for radix in reversed(radices):
-                        digits.append(rem % radix)
-                        rem //= radix
-                    digits.reverse()
-                    key = tuple(
-                        None if d == 0 else key_dicts[j][d - 1].as_py()
-                        for j, d in enumerate(digits))
-                    key_cache[code] = key
+            starts = np.concatenate(
+                [[0], np.flatnonzero(np.diff(sorted_codes)) + 1])
+            ends = np.append(starts[1:], n)
+            firsts = pa.array(order[starts])
+            keys = list(zip(*[batch.column(g).take(firsts).to_pylist()
+                              for g in group_cols])) \
+                if group_cols else [()]
+            for key, s_, e_ in zip(keys, starts.tolist(), ends.tolist()):
                 idx = order[s_:e_]
+                w = None if weights is None else weights[idx]
                 slot = slot_for(key)
-                rows[key] += int(e_ - s_)
+                rows[key] += (e_ - s_) if w is None else int(w.sum())
                 for i in range(len(specs)):
                     if i in value_based:
                         v_codes, v_dict = val_cols[i]
                         sub = v_codes[idx]
-                        sub = sub[sub >= 0]
-                        if sub.size:
-                            u, c = np.unique(sub, return_counts=True)
+                        keep = sub >= 0
+                        if keep.any():
+                            u, c = _value_counts(
+                                sub[keep], None if w is None else w[keep])
                             vc = slot[i]
                             for code_v, cnt in zip(u.tolist(), c.tolist()):
                                 v = v_dict[code_v].as_py()
@@ -185,3 +185,12 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
         yield from flush()
 
     return partial_fn
+
+
+def _value_counts(codes: np.ndarray, weights: np.ndarray | None):
+    """(distinct codes, their row counts — or weight sums)."""
+    if weights is None:
+        return np.unique(codes, return_counts=True)
+    u, inv = np.unique(codes, return_inverse=True)
+    return u, np.bincount(inv.reshape(-1), weights=weights,
+                          minlength=len(u)).astype(np.int64)

@@ -41,8 +41,8 @@ from tsv_utils_spark.plans.agg import (
     SketchSpec,
     _final_schema,
     _make_merge_fn,
-    _make_partial_fn,
     _partial_schema,
+    _partials,
 )
 
 
@@ -217,7 +217,6 @@ def sketch_agg_checkpointed(df: DataFrame,
     spark = df.sparkSession
     group_by = list(group_by)
     in_cols = [spec.input_expr(i) for i, spec in enumerate(specs)]
-    in_names = [f"__in_{i}" for i in range(len(specs))]
 
     partial_schema = _lineage_partial_schema(df, group_by, len(specs))
     partials_root = os.path.join(checkpoint_dir, "partials")
@@ -305,11 +304,6 @@ def sketch_agg_checkpointed(df: DataFrame,
     if _run_epochs is not None:
         todo = [e for e in todo if e in _run_epochs]
 
-    from tsv_utils_spark.plans.arrow_kernel import (
-        MAX_ARROW_KEYS,
-        make_arrow_partial_fn,
-    )
-
     for e in todo:
         t0 = time.perf_counter()
         src = epoch_input(e)
@@ -317,21 +311,9 @@ def sketch_agg_checkpointed(df: DataFrame,
         if src is None:
             partial = spark.createDataFrame([], partial_schema)
         else:
-            slice_df = src.select(*group_by, *in_cols)
-            if 1 <= len(group_by) <= MAX_ARROW_KEYS:
-                partial = slice_df.mapInArrow(
-                    make_arrow_partial_fn(group_by, in_names, specs,
-                                          partial_schema,
-                                          max_groups_per_partition,
-                                          lineage_epoch=e),
-                    schema=partial_schema)
-            else:
-                partial = slice_df.mapInPandas(
-                    _make_partial_fn(group_by, in_names, specs,
-                                     partial_schema,
-                                     max_groups_per_partition,
-                                     lineage_epoch=e),
-                    schema=partial_schema)
+            partial = _partials(src.select(*group_by, *in_cols), group_by,
+                                specs, partial_schema,
+                                max_groups_per_partition, lineage_epoch=e)
         # the directory name epoch=N IS the epoch (partition discovery
         # restores the column on read); writing it as data too would
         # collide with the partition column

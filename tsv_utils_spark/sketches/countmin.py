@@ -140,9 +140,9 @@ class CountMin:
             np.add.at(self.table[d], idx[d], cnt)
         self.n += int(cnt.sum())
         # track candidates — keys canonicalized (tz-aware datetimes ->
-        # naive UTC) so partials from the Arrow kernel (aware) and the
-        # pandas/salt kernels (naive) merge into ONE candidate per
-        # instant instead of splitting its counts
+        # naive UTC) so partials from the Arrow kernel (aware) and
+        # pandas inputs (naive) merge into ONE candidate per instant
+        # instead of splitting its counts
         from tsv_utils_spark.sketches.hashing import canon_datetime
 
         est = self.table[np.arange(self.depth)[:, None], idx].min(axis=0)

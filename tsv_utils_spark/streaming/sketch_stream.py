@@ -10,7 +10,8 @@ all-time aggregate: the sketch IS the compacted history).
 ``streaming_sketch_agg`` runs the two-level plan incrementally via
 ``foreachBatch``:
 
-  per micro-batch:  level-1 partials over the batch (mapInPandas)
+  per micro-batch:  level-1 partials over the batch (the Arrow kernel,
+                    mapInArrow — the same one batch sketch_agg runs)
   state update:     merge batch partials into the persistent per-key blob
                     table (parquet, atomic swap) — associativity makes the
                     result identical to a batch job over all data so far
@@ -37,8 +38,8 @@ from tsv_utils_spark.plans.agg import (
     _final_schema,
     _make_blob_merge_fn,
     _make_merge_fn,
-    _make_partial_fn,
     _partial_schema,
+    _partials,
 )
 
 # streaming state compaction (merge partial rows per key back into ONE
@@ -65,7 +66,6 @@ def make_processor(template_df: DataFrame,
     spark = template_df.sparkSession
     group_by = list(group_by)
     in_cols = [spec.input_expr(i) for i, spec in enumerate(specs)]
-    in_names = [f"__in_{i}" for i in range(len(specs))]
     partial_schema = _partial_schema(template_df, group_by, len(specs))
     final_schema = _final_schema(template_df, group_by, specs, True)
     os.makedirs(state_dir, exist_ok=True)
@@ -102,11 +102,8 @@ def make_processor(template_df: DataFrame,
             # stale) estimate output, which is idempotent, and skip the merge
             write_estimates(live_path)
             return
-        proj = batch_df.select(*group_by, *in_cols)
-        partials = proj.mapInPandas(
-            _make_partial_fn(group_by, in_names, specs, partial_schema,
-                             max_groups_per_partition),
-            schema=partial_schema)
+        partials = _partials(batch_df.select(*group_by, *in_cols), group_by,
+                             specs, partial_schema, max_groups_per_partition)
         if live_path is not None:
             old = spark.read.parquet(live_path)
             partials = old.unionByName(partials)
