@@ -327,6 +327,42 @@ class TestJoin:
             del os.environ["SPARK_TSV_BLOOM_JVM_MAX_BYTES"]
         assert got_jvm == got_legacy
 
+    def test_bloom_jvm_bits_capped_at_spark_max(self, spark, tables):
+        """The JVM Bloom size is capped at the session's
+        runtime.bloomFilter.maxNumBits (Spark would clamp it silently),
+        and a capped filter still gives the exact semi and anti rows."""
+        from tsv_utils_spark.operators.join import (
+            _SPARK_BLOOM_MAX_BITS,
+            _bloom_m_k,
+            _jvm_bloom_bits,
+            bloom_anti_join,
+            bloom_semi_join,
+        )
+
+        orders, cust = tables["orders"], tables["customer"]
+        small = cust.filter(F.col("c_custkey") % 3 == 0)
+        data = orders.withColumnRenamed("o_custkey", "c_custkey")
+
+        def rows():
+            return [sorted(r.o_orderkey for r in join(
+                data, small, ["c_custkey"], fpr=1e-9).collect())
+                for join in (bloom_semi_join, bloom_anti_join)]
+
+        assert _jvm_bloom_bits(spark, 1 << 30) == 64 << 20  # Spark default
+        default = rows()
+        m, _k = _bloom_m_k(small.count(), 1e-9)
+        assert m > 1024
+        spark.conf.set(_SPARK_BLOOM_MAX_BITS, "1024")
+        try:
+            assert _jvm_bloom_bits(spark, m) == 1024
+            assert _jvm_bloom_bits(spark, 1000) == 1000
+            out = bloom_semi_join(data, small, ["c_custkey"], fpr=1e-9)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "might_contain" in plan  # still the JVM path
+            assert rows() == default
+        finally:
+            spark.conf.unset(_SPARK_BLOOM_MAX_BITS)
+
     def test_bloom_malformed_env_knob_falls_back(self, tables, monkeypatch):
         """A non-integer SPARK_TSV_BLOOM_JVM_MAX_BYTES must not raise out
         of the Bloom joins: the rows equal the default run's."""

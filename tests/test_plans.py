@@ -186,11 +186,19 @@ class TestPlanShape:
         """Every sketch_agg shape runs level 1 as ONE mapInArrow kernel
         right below the merge exchange: 0, 1 and 4 keys, salt mode (its
         own salt exchange sits below the kernel) and the size-gated
-        weighted count-min pre-aggregation."""
+        weighted count-min pre-aggregation. Level 2 is the merge
+        mapInArrow over a key sort over a REPARTITION_BY_NUM exchange
+        into spark.sql.shuffle.partitions partitions (1 for 0 keys),
+        for sketch_partials and sketch_rollup too — no pandas anywhere."""
         import tsv_utils_spark.plans.quantiles as Q
         from pyspark.sql import functions as F
 
-        from tsv_utils_spark.plans import SketchSpec, sketch_agg
+        from tsv_utils_spark.plans import (
+            SketchSpec,
+            sketch_agg,
+            sketch_partials,
+            sketch_rollup,
+        )
 
         li = spark.read.parquet(f"{SF}/lineitem.parquet")
         for k in ("k2", "k3", "k4"):
@@ -199,23 +207,35 @@ class TestPlanShape:
                  SketchSpec("kll", "l_quantity", "q")]
         cm = [SketchSpec("cm", "l_linestatus", "m", {"finalize": "mode"})]
 
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
         def level1(df):
             plan = df._jdf.queryExecution().executedPlan()
             if plan.nodeName() == "AdaptiveSparkPlan":
                 plan = plan.initialPlan()  # exchanges already placed
-            names = []
+            nodes = []
             while True:  # the merge is the root's left-most spine
-                names.append(plan.nodeName())
+                nodes.append(plan)
                 if plan.children().isEmpty():
-                    return names
+                    return nodes
                 plan = plan.children().apply(0)
 
-        def check(spine, label):
-            assert spine.count("FlatMapGroupsInPandas") == 1, (label, spine)
-            below = spine[spine.index("Exchange") + 1:]
+        def check(nodes, label, n_keys=1):
+            spine = [n.nodeName() for n in nodes]
+            assert "FlatMapGroupsInPandas" not in spine, (label, spine)
+            assert "MapInPandas" not in spine, (label, spine)
+            top = spine.index("MapInArrow")
+            want = ["MapInArrow", "Exchange"] if n_keys == 0 else \
+                ["MapInArrow", "Sort", "Exchange"]
+            assert spine[top:top + len(want)] == want, (label, spine)
+            ex = nodes[top + len(want) - 1]
+            assert ex.shuffleOrigin().toString() == "REPARTITION_BY_NUM", \
+                (label, ex.toString())
+            assert ex.outputPartitioning().numPartitions() == \
+                (1 if n_keys == 0 else n_shuffle), (label, ex.toString())
+            below = spine[top + len(want):]
             below = [n for n in below if n != "Project"]
             assert below[0] == "MapInArrow", (label, spine)
-            assert "MapInPandas" not in spine, (label, spine)
 
         shapes = {
             "0 keys": sketch_agg(li, [], specs),
@@ -232,8 +252,19 @@ class TestPlanShape:
         finally:
             Q.MIN_INPUT_BYTES = old
         for label, df in shapes.items():
-            check(level1(df), label)
-        salt = level1(shapes["salt"])
+            check(level1(df), label, n_keys=0 if label == "0 keys" else 1)
+        salt = [n.nodeName() for n in level1(shapes["salt"])]
         assert salt.count("Exchange") == 2, salt
-        wcm = level1(shapes["weighted cm"])
-        assert wcm[wcm.index("MapInArrow") + 1] == "HashAggregate", wcm
+        wcm = [n.nodeName() for n in level1(shapes["weighted cm"])]
+        l1 = len(wcm) - 1 - wcm[::-1].index("MapInArrow")
+        assert wcm[l1 + 1] == "HashAggregate", wcm
+
+        # the blob-table forms merge through the same kernel
+        blobs = sketch_partials(li, ["l_returnflag", "l_linestatus"], specs)
+        check(level1(blobs), "sketch_partials")
+        for fin in (True, False):
+            rolled = sketch_rollup(blobs, ["l_returnflag"], specs,
+                                   finalize=fin)
+            spine = [n.nodeName() for n in level1(rolled)]
+            assert spine.count("MapInArrow") == 3, spine
+            check(level1(rolled), f"sketch_rollup finalize={fin}")

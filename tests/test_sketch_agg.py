@@ -217,6 +217,46 @@ class TestArrowKernelEdges:
         assert any(k[0] is None for k in got) and any(k[0] == "" for k in got)
         assert any(k[2] is None for k in got) and any(k[2] == "" for k in got)
 
+        # empty input: no groups, no rows, at 0 keys and at 1 key
+        empty = li.limit(0)
+        assert sketch_agg(empty, [], specs, include_rows=True).collect() == []
+        assert sketch_agg(empty, ["l_returnflag"], specs,
+                          include_rows=True).collect() == []
+
+    def test_float_keys_group_like_spark(self, spark):
+        """NaN, NULL, -0.0 and 0.0 group keys come back as Spark's
+        groupBy forms them — NaN apart from NULL, -0.0 with 0.0 — through
+        sketch_agg and through sketch_partials -> sketch_rollup, with
+        two-row Arrow batches so runs of equal keys straddle batches."""
+        import math
+
+        from tsv_utils_spark.plans import sketch_partials, sketch_rollup
+
+        keys = [float("nan"), None, -0.0, 0.0, 1.5]
+        df = spark.createDataFrame(
+            [(keys[i % 5], i % 7) for i in range(60)], "g double, v long") \
+            .repartition(3)
+        specs = [SketchSpec("hll", "v", "uc")]
+
+        def groups(rows, n):
+            def key(g):
+                return "nan" if g is not None and math.isnan(g) else g
+            return sorted(((key(r["g"]), r[n]) for r in rows), key=repr)
+
+        exact = groups(df.groupBy("g").count().collect(), "count")
+        assert len(exact) == 4
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, "2")
+        try:
+            direct = sketch_agg(df, ["g"], specs, include_rows=True)
+            rolled = sketch_rollup(sketch_partials(df, ["g"], specs), ["g"],
+                                   specs, include_rows=True)
+            for out in (direct, rolled):
+                assert groups(out.collect(), "rows") == exact
+        finally:
+            spark.conf.set(conf, old)
+
     @staticmethod
     def _run_kernel(keys, key_type, specs, batch):
         from pyspark.sql import types as T
@@ -471,25 +511,23 @@ class TestSketchRollup:
                     datetime.datetime(2024, 3, 1, 12, 0, 0), (m, g, v)
                 assert out.loc[g, "mode_n"] == 50, (m, g)
 
-    def test_typed_timestamp_requires_utc_session(self, spark):
-        import pytest
-
-        df = spark.range(10).selectExpr(
-            "cast(id % 2 as string) as g",
-            "timestamp'2024-03-01 12:00:00' as ts")
+    def test_typed_timestamp_keeps_instant_in_any_session(self, spark):
+        """A typed timestamp mode is the same instant in and out under a
+        non-UTC session, in map and salt mode: no merge may read the
+        kernel's UTC value as session-local time."""
         spec = [SketchSpec("cm", "ts", "m",
                            {"finalize": "mode", "typed": True,
                             "out_type": "timestamp"})]
-        # UTC session (the repo default): fine
-        out = sketch_agg(df, ["g"], spec)
-        assert out.count() == 2
-        # non-UTC session: the merge would hand the naive-UTC mode back
-        # as session-local time and shift it — refuse loudly instead
         old = spark.conf.get("spark.sql.session.timeZone")
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
         try:
-            with pytest.raises(ValueError, match="timeZone"):
-                sketch_agg(df, ["g"], spec)
+            df = spark.range(10).selectExpr(
+                "cast(id % 2 as string) as g",
+                "timestamp_seconds(1709312400) as ts")
+            for m in ("map", "salt"):
+                out = sketch_agg(df, ["g"], spec, mode=m, salt_partitions=4)
+                got = out.select(F.unix_seconds("m").alias("s")).collect()
+                assert [r["s"] for r in got] == [1709312400] * 2, m
         finally:
             spark.conf.set("spark.sql.session.timeZone", old)
 
@@ -678,6 +716,7 @@ class TestCmWeightedFastPath:
         assert by_g["a"][4] == 500
         assert by_g["b"][2] == "t" and by_g["b"][4] == 1
         assert by_g[None][2] == "n"
+        assert by_g[None][3] is None  # no x values: NULL median, not NaN
 
     def test_topk_json(self, spark):
         df = spark.createDataFrame(

@@ -144,14 +144,24 @@ def _bloom_m_k(n: int, fpr: float) -> tuple[int, int]:
     return m, k
 
 
-# Above this filter size the JVM-native path (which embeds the built
-# filter as a plan literal, exactly like Spark's own runtime-bloom
+# Above this REQUESTED filter size the JVM-native path (which embeds the
+# built filter as a plan literal, exactly like Spark's own runtime-bloom
 # scalar subquery does) falls back to the broadcast+numpy path: a
 # multi-hundred-MB literal belongs in a broadcast, not the task binary.
-# Spark's own runtime filter caps itself at 8MB (numBits default) for
-# the same reason; we allow more because the build side is counted, not
-# estimated.
+# Below it the JVM filter is capped at the session's
+# spark.sql.optimizer.runtime.bloomFilter.maxNumBits (8 MB by default;
+# bloom_filter_agg would clamp to it silently anyway), so a request
+# between that cap and this gate runs at the cap with a higher FPR than
+# asked: the exact reconciliation join keeps the rows exact, only the
+# prefilter passes more false positives.
 _JVM_BLOOM_MAX_BYTES = 32 << 20
+_SPARK_BLOOM_MAX_BITS = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+
+
+def _jvm_bloom_bits(spark, m: int) -> int:
+    """``m`` capped at the session's JVM Bloom size limit (Spark's
+    default: 64 Mi bits = 8 MB)."""
+    return min(m, int(spark.conf.get(_SPARK_BLOOM_MAX_BITS, str(64 << 20))))
 
 
 def _jvm_bloom_hit_col(filter_df: DataFrame, keys: list[str],
@@ -195,6 +205,7 @@ def _jvm_bloom_hit_col(filter_df: DataFrame, keys: list[str],
         m, _k = _bloom_m_k(n, fpr)
         if m // 8 > max_bytes:
             return None
+        m = _jvm_bloom_bits(spark, m)
         agg = bfa_cls(_expr(F.col("__h")),
                       _expr(F.lit(max(n, 1)).cast("long")),
                       _expr(F.lit(m).cast("long"))).toAggregateExpression()

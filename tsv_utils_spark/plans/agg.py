@@ -15,7 +15,9 @@ two-level plan explicitly (SURVEY.md §4 "what needs custom work"):
                          exceeds ``max_groups_per_partition``, partials
                          are flushed early (extra partial rows per group
                          are fine — merge absorbs them).
-    level 2 (final)    — groupBy(keys).applyInPandas: deserialize, merge
+    level 2 (final)    — repartition(n, keys) + sortWithinPartitions(keys)
+                         + mapInArrow, through ONE merge kernel: each run
+                         of equal keys is a group; deserialize, merge
                          (associative, any order), finalize to estimate
                          columns. Shuffles only the tiny partial rows,
                          never the raw data.
@@ -44,6 +46,7 @@ from pyspark.sql import types as T
 
 from tsv_utils_spark.plans.arrow_kernel import (
     WEIGHT_COL,
+    make_arrow_merge_fn,
     make_arrow_partial_fn,
 )
 from tsv_utils_spark.sketches.bloom import BloomFilter
@@ -199,7 +202,9 @@ class SketchSpec:
             return [float(sketch.estimate())]
         if self.op in ("kll", "tdigest"):
             qs = self.params.get("quantiles", [0.5])
-            return [float(sketch.quantile(q)) for q in qs]
+            vals = [float(sketch.quantile(q)) for q in qs]
+            # no values (all NULL) -> NULL, as SQL's percentile gives
+            return [None if v != v else v for v in vals]
         if self.op == "cm":
             fin = self.params.get("finalize", "mode")
             m = sketch.mode()
@@ -280,29 +285,6 @@ _TYPE_MAP = {"double": T.DoubleType, "long": T.LongType,
              "int": T.IntegerType}
 
 
-def _check_typed_tz(df: DataFrame, specs: list) -> None:
-    """Typed cm/bloom over a session-local TIMESTAMP column requires a
-    UTC session. The Arrow kernel is timezone-free — it sees tz-aware
-    datetimes and canonicalizes candidates to naive UTC — but the
-    level-2 merge returns a typed mode as that naive-UTC value through
-    applyInPandas, which reads naive timestamps as SESSION-LOCAL time:
-    under a non-UTC session the finalized instant would shift by the
-    zone offset. TIMESTAMP_NTZ and DATE are timezone-free and always
-    fine."""
-    risky = [s.col for s in specs
-             if s.op in ("cm", "bloom") and s.params.get("typed")
-             and dict(df.dtypes).get(s.col) == "timestamp"]
-    if not risky:
-        return
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-    if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z"):
-        raise ValueError(
-            f"typed sketch keys over session-local TIMESTAMP column(s) "
-            f"{risky} need spark.sql.session.timeZone=UTC (got {tz!r}) "
-            f"— cast to timestamp_ntz, use to_utc_timestamp, or derive "
-            f"a DATE key instead")
-
-
 # ------------------------------------------------------------- the engine
 def sketch_agg(df: DataFrame,
                group_by: list[str],
@@ -318,11 +300,9 @@ def sketch_agg(df: DataFrame,
     if mode not in ("map", "salt"):
         raise ValueError("mode must be 'map' or 'salt'")
     group_by = list(group_by)
-    _check_typed_tz(df, specs)
 
     canon, cmap = _canon_specs(specs)
     in_cols = [spec.input_expr(i) for i, spec in enumerate(canon)]
-    final_schema = _final_schema(df, group_by, specs, include_rows)
     proj = None
 
     # ---- pure distinct-sketch fast path (r6) --------------------------
@@ -404,10 +384,7 @@ def sketch_agg(df: DataFrame,
     partials = _partials(proj, group_by, canon,
                          _partial_schema(df, group_by, len(canon)),
                          max_groups_per_partition)
-    return partials.groupBy(*group_by).applyInPandas(
-        _make_merge_fn(group_by, specs, final_schema, include_rows,
-                       canon_map=cmap),
-        schema=final_schema)
+    return _merge(partials, group_by, specs, include_rows, canon_map=cmap)
 
 
 def _partials(proj: DataFrame, group_by: list[str], specs: list[SketchSpec],
@@ -420,6 +397,31 @@ def _partials(proj: DataFrame, group_by: list[str], specs: list[SketchSpec],
         make_arrow_partial_fn(group_by, in_names, specs, partial_schema,
                               max_groups, lineage_epoch=lineage_epoch),
         schema=partial_schema)
+
+
+def _merge(partials: DataFrame, group_by: list[str], specs: list[SketchSpec],
+           include_rows: bool = False, canon_map: list[int] | None = None,
+           finalize: bool = True) -> DataFrame:
+    """Level 2: the Arrow merge kernel over partials shuffled by key into
+    ``spark.sql.shuffle.partitions`` partitions and sorted within each.
+    An explicit count is a REPARTITION_BY_NUM exchange, which AQE never
+    coalesces: the blob shuffle is small in bytes but costly in CPU.
+    Zero keys = one global group in one partition (a shuffle, not a
+    ``coalesce(1)``, which would pull level 1 into a single task).
+    Emits finalized estimates, or with ``finalize=False`` a blob table
+    (keys, ``__rows``, one merged ``__blob_i`` per spec)."""
+    out_schema = _final_schema(partials, group_by, specs, include_rows) \
+        if finalize else _partial_schema(partials, group_by, len(specs))
+    if group_by:
+        n = int(partials.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        partials = partials.repartition(n, *group_by) \
+            .sortWithinPartitions(*group_by)
+    else:
+        partials = partials.repartition(1)
+    return partials.mapInArrow(
+        make_arrow_merge_fn(group_by, specs, out_schema, include_rows,
+                            canon_map=canon_map, finalize=finalize),
+        schema=out_schema)
 
 
 def sketch_partials(df: DataFrame,
@@ -435,18 +437,15 @@ def sketch_partials(df: DataFrame,
     per-day / per-repo / global forever after from blobs.
     """
     group_by = list(group_by)
-    _check_typed_tz(df, specs)
     if not group_by:
         raise ValueError("sketch_partials needs at least one group key "
                          "(use sketch_agg for global aggregation)")
     in_cols = [spec.input_expr(i) for i, spec in enumerate(specs)]
     proj = df.select(*group_by, *in_cols)
-    partial_schema = _partial_schema(df, group_by, len(specs))
-    partials = _partials(proj, group_by, specs, partial_schema,
+    partials = _partials(proj, group_by, specs,
+                         _partial_schema(df, group_by, len(specs)),
                          max_groups_per_partition)
-    return partials.groupBy(*group_by).applyInPandas(
-        _make_blob_merge_fn(group_by, specs, partial_schema),
-        schema=partial_schema)
+    return _merge(partials, group_by, specs, finalize=False)
 
 
 def sketch_rollup(blobs: DataFrame,
@@ -467,39 +466,7 @@ def sketch_rollup(blobs: DataFrame,
     if missing:
         raise ValueError(f"rollup keys {missing} not in blob table "
                          f"columns {blobs.columns}")
-    if not finalize:
-        schema = T.StructType(
-            [blobs.schema[k] for k in group_by]
-            + [T.StructField("__rows", T.LongType())]
-            + [T.StructField(f"__blob_{i}", T.BinaryType())
-               for i in range(len(specs))])
-        return blobs.groupBy(*group_by).applyInPandas(
-            _make_blob_merge_fn(group_by, specs, schema), schema=schema)
-    final_schema = T.StructType(
-        [blobs.schema[k] for k in group_by]
-        + ([T.StructField("rows", T.LongType())] if include_rows else [])
-        + [T.StructField(name, _TYPE_MAP[typ]())
-           for spec in specs for name, typ in spec.output_fields()])
-    return blobs.groupBy(*group_by).applyInPandas(
-        _make_merge_fn(group_by, specs, final_schema, include_rows),
-        schema=final_schema)
-
-
-def _make_blob_merge_fn(group_by, specs, out_schema):
-    """Merge a group's partial blobs into ONE blob row per spec (the
-    blob-table form of _make_merge_fn)."""
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = {k: [pdf[k].iloc[0]] for k in group_by}
-        row["__rows"] = [int(pdf["__rows"].sum())]
-        for i, spec in enumerate(specs):
-            blobs_i = pdf[f"__blob_{i}"]
-            s = spec.deserialize(bytes(blobs_i.iloc[0]))
-            for b in blobs_i.iloc[1:]:
-                s.merge(spec.deserialize(bytes(b)))
-            row[f"__blob_{i}"] = [s.serialize()]
-        return pd.DataFrame(row)
-
-    return merge_fn
+    return _merge(blobs, group_by, specs, include_rows, finalize=finalize)
 
 
 def choose_salt(df: DataFrame, group_by: list[str],
@@ -527,37 +494,3 @@ def choose_salt(df: DataFrame, group_by: list[str],
     import math
 
     return max(1, min(sp, math.ceil(share * sp * headroom)))
-
-
-def _make_merge_fn(group_by, specs, final_schema, include_rows,
-                   canon_map=None):
-    """Level-2 merge+finalize. With ``canon_map`` (from _canon_specs),
-    partial rows carry one blob per CANONICAL spec; each is deserialized
-    and merged once, and state-sharing specs finalize from the shared
-    merged sketch (finalizers are read-only)."""
-    cmap = canon_map if canon_map is not None else list(range(len(specs)))
-    n_blobs = (max(cmap) + 1) if cmap else 0
-    rep = {}
-    for i, j in enumerate(cmap):
-        rep.setdefault(j, specs[i])
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = []
-        for j in range(n_blobs):
-            spec = rep[j]
-            blobs = pdf[f"__blob_{j}"]
-            s = spec.deserialize(bytes(blobs.iloc[0]))
-            for b in blobs.iloc[1:]:
-                s.merge(spec.deserialize(bytes(b)))
-            merged.append(s)
-        row = {k: [pdf[k].iloc[0]] for k in group_by}
-        if include_rows:
-            row["rows"] = [int(pdf["__rows"].sum())]
-        for i, spec in enumerate(specs):
-            names = [n for n, _ in spec.output_fields()]
-            vals = spec.finalize(merged[cmap[i]])
-            for n, v in zip(names, vals):
-                row[n] = [v]
-        return pd.DataFrame(row)
-
-    return merge_fn

@@ -1,8 +1,9 @@
-"""Arrow-native level-1 kernel (mapInArrow) — the only level-1 kernel of
-the sketch engine: sketch_agg in map and salt mode and its prefilters,
-sketch_partials, the checkpointed plan and the streaming processor.
+"""Arrow-native kernels (mapInArrow) of the sketch engine, one per level.
 
-Everything stays columnar:
+Level 1, ``make_arrow_partial_fn`` — the only partial kernel: sketch_agg
+in map and salt mode and its prefilters, sketch_partials, the
+checkpointed plan and the streaming processor. Everything stays
+columnar:
 
 - group keys, any number of columns (zero = one global group):
   ``pc.dictionary_encode`` per key column -> int codes, packed into ONE
@@ -23,6 +24,13 @@ count-min path feeds JVM-pre-aggregated (keys, value, count) rows).
 Numeric specs see each row once, which only the multiplicity-invariant
 hll/theta tolerate. Any other extra column (salt mode's ``__salt``) is
 ignored.
+
+Level 2, ``make_arrow_merge_fn`` — the only merge kernel: partial rows
+arrive sorted by key within each partition, so each run of equal keys is
+one group. Its blobs are deserialized and merged (associative, any
+order) and the group leaves as one finalized row, or as one merged blob
+per spec for a sketch table. Run boundaries follow Spark's grouping:
+NULL equals NULL, NaN equals NaN and -0.0 equals 0.0.
 """
 
 from __future__ import annotations
@@ -32,6 +40,8 @@ import pyarrow as pa
 
 WEIGHT_COL = "__w"
 _INT64_MAX = int(np.iinfo(np.int64).max)
+_CHUNK = 1024  # rows per output RecordBatch
+_NAN = object()  # the one NaN group key: Spark groups every NaN together
 
 
 def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
@@ -40,7 +50,6 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
     from pyspark.sql.pandas.types import to_arrow_schema
 
     group_cols = list(group_cols)
-    out_names = [f.name for f in partial_schema.fields]
     pa_schema = to_arrow_schema(partial_schema)
     value_based = {i for i, s in enumerate(specs) if s.op in ("cm", "bloom")}
 
@@ -70,16 +79,11 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
             items = list(buf.items())
             buf.clear()
             buffered = 0
-            CHUNK = 1024
-            for lo in range(0, len(items), CHUNK):
-                cols: dict = {name: [] for name in out_names}
-                for key, per_spec in items[lo:lo + CHUNK]:
-                    if lineage_epoch is not None:
-                        cols["epoch"].append(lineage_epoch)
-                        cols["partition_id"].append(pid)
-                    for j, gname in enumerate(group_cols):
-                        cols[gname].append(key[j])
-                    cols["__rows"].append(rows[key])
+            for lo in range(0, len(items), _CHUNK):
+                out = []
+                for key, per_spec in items[lo:lo + _CHUNK]:
+                    row = [] if lineage_epoch is None else [lineage_epoch, pid]
+                    row += [*key, rows[key]]
                     for i, spec in enumerate(specs):
                         sk = spec.make()
                         if i in value_based:
@@ -99,10 +103,9 @@ def make_arrow_partial_fn(group_cols, in_names, specs, partial_schema,
                                 spec.update_array(
                                     sk, chunks[0] if len(chunks) == 1
                                     else np.concatenate(chunks))
-                        cols[f"__blob_{i}"].append(sk.serialize())
-                arrays = [pa.array(cols[name], type=field.type)
-                          for name, field in zip(out_names, pa_schema)]
-                yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
+                        row.append(sk.serialize())
+                    out.append(row)
+                yield _record_batch(out, pa_schema)
             rows.clear()
 
         def encode_col(col):
@@ -194,3 +197,74 @@ def _value_counts(codes: np.ndarray, weights: np.ndarray | None):
     u, inv = np.unique(codes, return_inverse=True)
     return u, np.bincount(inv.reshape(-1), weights=weights,
                           minlength=len(u)).astype(np.int64)
+
+
+def make_arrow_merge_fn(group_by, specs, out_schema, include_rows: bool,
+                        canon_map=None, finalize: bool = True):
+    """Level-2 merge over partial batches sorted by ``group_by`` within
+    the partition. Partial rows carry ``__rows`` and one ``__blob_j`` per
+    CANONICAL spec (``canon_map``, from ``agg._canon_specs``, maps each
+    spec to its blob; None = one blob per spec), merged once per group;
+    state-sharing specs finalize from the shared merged sketch.
+    ``finalize=False`` emits the blob-table form instead: keys, summed
+    ``__rows``, merged blobs."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    group_by = list(group_by)
+    pa_schema = to_arrow_schema(out_schema)
+    cmap = list(range(len(specs))) if canon_map is None else list(canon_map)
+    canon = [specs[cmap.index(j)] for j in range(max(cmap, default=-1) + 1)]
+
+    def merge_fn(batches):
+        out: list = []
+        key = norm = merged = None
+        rows = 0
+
+        def finish():
+            # -0.0 comes out as 0.0, the key Spark's groupBy returns
+            row = [v + 0.0 if type(v) is float else v for v in key]
+            if not finalize:
+                row += [rows, *(s.serialize() for s in merged)]
+            else:
+                row += [rows] if include_rows else []
+                for i, spec in enumerate(specs):
+                    row += spec.finalize(merged[cmap[i]])
+            out.append(row)
+
+        for batch in batches:
+            n = batch.num_rows
+            keys = list(zip(*[batch.column(g).to_pylist()
+                              for g in group_by])) if group_by else [()] * n
+            row_counts = batch.column("__rows").to_pylist()
+            blobs = [batch.column(f"__blob_{j}").to_pylist()
+                     for j in range(len(canon))]
+            for r, k in enumerate(keys):
+                # NaN equals NaN in a group key (NULL == NULL and
+                # -0.0 == 0.0 already hold in Python)
+                nk = tuple(_NAN if v != v else v for v in k)
+                if merged is not None and nk == norm:
+                    for s, spec, col in zip(merged, canon, blobs):
+                        s.merge(spec.deserialize(col[r]))
+                    rows += row_counts[r]
+                    continue
+                if merged is not None:
+                    finish()
+                    if len(out) >= _CHUNK:
+                        yield _record_batch(out, pa_schema)
+                        out.clear()
+                key, norm, rows = k, nk, row_counts[r]
+                merged = [spec.deserialize(col[r])
+                          for spec, col in zip(canon, blobs)]
+        if merged is not None:
+            finish()
+        if out:
+            yield _record_batch(out, pa_schema)
+
+    return merge_fn
+
+
+def _record_batch(rows: list, pa_schema) -> pa.RecordBatch:
+    """One output batch from row lists in ``pa_schema`` column order."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), pa_schema)],
+        schema=pa_schema)

@@ -39,8 +39,7 @@ from pyspark.sql import types as T
 
 from tsv_utils_spark.plans.agg import (
     SketchSpec,
-    _final_schema,
-    _make_merge_fn,
+    _merge,
     _partial_schema,
     _partials,
 )
@@ -340,10 +339,7 @@ def sketch_agg_checkpointed(df: DataFrame,
 
     all_partials = spark.read.parquet(partials_root) \
         .drop("epoch", "partition_id")
-    final_schema = _final_schema(df, group_by, specs, include_rows)
-    return all_partials.groupBy(*group_by).applyInPandas(
-        _make_merge_fn(group_by, specs, final_schema, include_rows),
-        schema=final_schema)
+    return _merge(all_partials, group_by, specs, include_rows)
 
 
 def completed_epochs(checkpoint_dir: str) -> set[int]:
